@@ -159,7 +159,7 @@ object Bench {
     def r3(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results
-      .map { case (k, _, ws, _) => "\"" + k + "\":" + r3(median(ws)) }
+      .map { case (k, _, ws, _) => SparkEntry.jsonString(k) + ":" + r3(median(ws)) }
       .mkString("{", ",", "}")
     val total = results.map(r => median(r._3)).filter(_ >= 0).sum
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
@@ -184,7 +184,7 @@ object Bench {
     // the totals-line contract and bench_out.json/bench_detail.json are
     // unchanged, as is the timing loop.
     results.foreach { case (k, c, ws, _) =>
-      println(s"""{"metric":"q","name":"$k","warm":${r3(median(ws))},"cold":${r3(c)}}""")
+      println(s"""{"metric":"q","name":${SparkEntry.jsonString(k)},"warm":${r3(median(ws))},"cold":${r3(c)}}""")
     }
     println(line)
     try {
@@ -193,10 +193,10 @@ object Bench {
       // failed sample keeps its -1 slot): bench_flags.py's bracketing
       // lookup depends on the alignment and skips non-positive values
       val ctlJson =
-        s"""{"name":"$controlName","every":$CtlEvery,"min":${r3(ctlMin)},"median":${r3(ctlMed)},"samples":[${ctlSamples.map(s => r3(s._2)).mkString(",")}],"positions":[${ctlSamples.map(_._1).mkString(",")}]}"""
+        s"""{"name":${SparkEntry.jsonString(controlName)},"every":$CtlEvery,"min":${r3(ctlMin)},"median":${r3(ctlMed)},"samples":[${ctlSamples.map(s => r3(s._2)).mkString(",")}],"positions":[${ctlSamples.map(_._1).mkString(",")}]}"""
       val detail = results.zipWithIndex
         .map { case ((k, c, ws, qLoad), i) =>
-          "\"" + k + "\":{\"cold\":" + r3(c) +
+          SparkEntry.jsonString(k) + ":{\"cold\":" + r3(c) +
             ",\"warm\":" + r3(median(ws)) +
             ",\"wmin\":" + r3(ws.min) + ",\"wmax\":" + r3(ws.max) +
             ",\"load\":" + r3(qLoad) + ",\"reps\":" + ws.size +

@@ -25,4 +25,18 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped, so a tab or quote in a query name or
+    * its SQL cannot break a consumer's JSON parse.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1049,7 +1049,7 @@ object Dedup {
   private def readBandParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, Int, Long) = {
     val row =
-      try spark.read.parquet(s"$path/_params").head()
+      try StoreLayout.readParams(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(

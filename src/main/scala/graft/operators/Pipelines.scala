@@ -74,14 +74,18 @@ object Pipelines {
     * plan-pinned in the test), which is the access pattern every epoch
     * runs. The whole chain before the sink remains ONE lazy plan;
     * `nBuckets` sizes the packing windows ([[Packing.packChunks]]'s
-    * single-task-per-bucket contract).
+    * single-task-per-bucket contract). Documents with a null id are
+    * dropped before chunking: a null id has no split (see
+    * [[Selection.hashSplit]]), so it could only land in a null split
+    * partition that no split filter reads.
     */
   def materializeTrainingSet(df: DataFrame, idCol: String, textCol: String,
       path: String, budget: Int = 2048, nBuckets: Int = 256,
       splits: Seq[(String, Double)] =
         Seq("train" -> 0.98, "val" -> 0.01, "test" -> 0.01),
       chunkSize: Int = 100, overlap: Int = 50): DataFrame = {
-    val chunks = curateForTraining(df, idCol, textCol, chunkSize, overlap)
+    val chunks = curateForTraining(df.filter(F.col(idCol).isNotNull), idCol,
+      textCol, chunkSize, overlap)
     val split = Selection.hashSplit(chunks, idCol, splits)
     val packed = Packing.packChunks(split, idCol, "chunk_idx", "n_tokens",
       budget, nBuckets, extraPartitionCols = Seq("split"))

@@ -534,13 +534,11 @@ object Selection {
     def splitFilter(flag: String): Column =
       F.col(flag) === (F.col("n") >= 1)
     val trainFeats = feats.filter(splitFilter("__tr"))
-    // same aggregate as nbFit's counts (the id guard is vacuous — the
-    // feature stage drops null ids — and keeps the branch canonical)
+    // same aggregate as nbFit's counts: null-id training docs count like
+    // any other, as they do in the two-frame form
     val counts = trainFeats.groupBy("feat").agg(
-      F.sum(F.when(F.col(idCol).isNotNull && F.col("__lab"), F.col("n"))
-        .otherwise(0L)).as("cpos"),
-      F.sum(F.when(F.col(idCol).isNotNull && !F.col("__lab"), F.col("n"))
-        .otherwise(0L)).as("cneg"))
+      F.sum(F.when(F.col("__lab"), F.col("n")).otherwise(0L)).as("cpos"),
+      F.sum(F.when(!F.col("__lab"), F.col("n")).otherwise(0L)).as("cneg"))
     val prior = df.filter(trainCond).agg(
       F.sum(F.when(labelCond, 1L).otherwise(0L)).cast("double").as("__np"),
       F.sum(F.when(!labelCond, 1L).otherwise(0L)).cast("double").as("__nn"))

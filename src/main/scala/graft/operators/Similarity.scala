@@ -764,7 +764,7 @@ object Similarity {
     * (manifest-less) index serves from partition discovery as before
     * (and has no versions to pin).
     */
-  private def readIndex(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Option[Long] = None): DataFrame = {
     val (fs, p) = StoreLayout.fsFor(spark, path)
     val pinned = version match {
@@ -774,9 +774,7 @@ object Similarity {
     pinned match {
       case None => spark.read.parquet(path)
       case Some(files) =>
-        spark.read.option("basePath", path)
-          .parquet(files.map(n =>
-            new org.apache.hadoop.fs.Path(p, n).toString): _*)
+        StoreLayout.readFiles(spark, fs, p, files, basePath = Some(path))
     }
   }
 
@@ -1149,8 +1147,7 @@ object Similarity {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (before.isEmpty) return
     def read(files: Seq[String]): DataFrame =
-      spark.read.option("basePath", path)
-        .parquet(files.map(n => new Path(p, n).toString): _*)
+      StoreLayout.readFiles(spark, fs, p, files, basePath = Some(path))
     val (scopeFiles, foldedThunk) = scope(before, read)
     if (scopeFiles.isEmpty) return // nothing to rewrite
     // fold: one shuffle partition per list (hash collisions co-locating
@@ -1187,7 +1184,7 @@ object Similarity {
     */
   private def requireIndexKind(spark: org.apache.spark.sql.SparkSession,
       path: String, wantCodes: Boolean): Unit = {
-    val schema = spark.read.parquet(path).schema
+    val schema = readIndex(spark, path).schema
     val hasCodes = schema.fieldNames.contains("codes")
     require(hasCodes == wantCodes,
       if (wantCodes) s"$path is a plain IVF index (no codes column); use appendToIvfIndex"
@@ -1255,66 +1252,19 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/_meta")
   }
 
-  /** Probe-path side-table cache (`_meta`+`_centroids`, `_codebooks`):
-    * keyed on the index path, validated on EVERY call against a
-    * fingerprint of the side directory's file listing (name, mtime,
-    * length — one FS listing, zero Spark jobs), so a rebuild that
-    * rewrites the side tables (new part-file UUIDs) invalidates
-    * naturally and staleness is impossible. Probes are latency-bound
-    * fixed-cost paths — the r15 bench adjudication traced q_knn_index's
-    * warm floor to these two small parquet reads repeated per probe; a
-    * hit replaces both Spark jobs with the listing check. Bounded by a
-    * true access-order LRU at 256 entries (keys are index paths — tests
-    * create many temp indexes; r16 verdict nit: the former
-    * clear-everything-past-256 made one unlucky probe repay every OTHER
-    * index's side reads). The synchronized map is fine here: the
-    * critical section is a hash get/put on a probe path that is
-    * latency-bound on Spark jobs, not on this lock.
-    */
-  private[graft] val sideCache: java.util.Map[String, (String, AnyRef)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (String, AnyRef)](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
-          size > 256
-      })
-
-  private def sideFingerprint(spark: org.apache.spark.sql.SparkSession,
-      path: String, dirs: Seq[String]): String = {
-    val (fs, p) = StoreLayout.fsFor(spark, path)
-    dirs.flatMap { d =>
-      val dp = new org.apache.hadoop.fs.Path(p, d)
-      try fs.listStatus(dp).toSeq
-        .map(st => s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
-      catch { case _: java.io.FileNotFoundException => Seq(s"$d:absent") }
-    }.sorted.mkString("|")
-  }
-
-  private def cachedSide[T <: AnyRef](spark: org.apache.spark.sql.SparkSession,
-      path: String, kind: String, dirs: Seq[String])(load: => T): T = {
-    val fp = sideFingerprint(spark, path, dirs)
-    val key = s"$path#$kind"
-    sideCache.get(key) match {
-      case (oldFp, v) if oldFp == fp => v.asInstanceOf[T]
-      case _ =>
-        val v = load // a throwing load caches nothing — errors stay loud per call
-        sideCache.put(key, (fp, v)) // LRU-bounded at 256 by the map itself
-        v
-    }
-  }
-
   /** Shared `_centroids` load: bounded driver-side collect, cid-ascending
     * (assignment correctness depends on the stable order). Fails fast when
     * the artifact's `_meta` is missing (built by a pre-metric-stamp
     * version, which assigned by max inner product) or names a different
     * assignment metric — the stored layout would not be the tessellation
     * this version probes. Cached per path behind a file-listing
-    * fingerprint ([[sideFingerprint]]) — `_meta` rides the fingerprint so
-    * a metric mismatch still fails fast after any rewrite.
+    * fingerprint ([[StoreLayout.cachedSide]]) — `_meta` rides the
+    * fingerprint so a metric mismatch still fails fast after any rewrite.
     */
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[(Int, Array[Double])] =
-    cachedSide(spark, path, "centroids", Seq("_meta", "_centroids")) {
+    StoreLayout.cachedSide(spark, path, "centroids",
+        Seq("_meta", "_centroids")) {
       val assign =
         try spark.read.parquet(s"$path/_meta").head().getString(0)
         catch {
@@ -1336,7 +1286,7 @@ object Similarity {
     */
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Array[Double]]] =
-    cachedSide(spark, path, "codebooks", Seq("_codebooks")) {
+    StoreLayout.cachedSide(spark, path, "codebooks", Seq("_codebooks")) {
       val rows = spark.read.parquet(s"$path/_codebooks").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
         .toMap
@@ -2257,16 +2207,19 @@ object Similarity {
     val dot = intDot(F.col("x.__q"), F.col("y.__q"))
     // Conservative DOUBLE pre-filter ahead of the exact decimal test
     // (guide §1.2 per-task work; the decimal multiplies were ~2/3 of the
-    // pair stage's CPU at sf0.1). Soundness: __dot/__na are EXACT int64
-    // ≤ 2^46 (|q_i| ≤ 2^20·1, dim ≤ 64 ⇒ Σ q_i² ≤ 2^46), so each is
-    // exactly representable in double (≤ 2^53); the two products and one
-    // scale each round once, so lhs_d/rhs_d carry relative error
-    // ≤ 3·2^-53 < 2^-51 per side. A pair is discarded only when
-    // lhs_d < rhs_d·(1 − 1e-12), and 1e-12 ≈ 2^-40 ≫ 2^-50 total error —
-    // a discarded pair PROVABLY fails the exact test, so the surviving
-    // pair set (decided by the unchanged decimal conjunct, which the
-    // DuckDB oracle replays in HUGEINT) is identical. Conjuncts evaluate
-    // left-to-right, so the decimal arithmetic now runs only on the
+    // pair stage's CPU at sf0.1). Soundness is scale-free: every step of
+    // lhs_d and rhs_d (each int64 -> double cast, each product, each
+    // scale literal) rounds at most once to nearest, with relative error
+    // ≤ 2^-53 whatever the magnitude — casts of int64s past 2^53 round
+    // too, and no product of int64-sized operands comes near the double
+    // range. At most five roundings per side bound each side's relative
+    // error below 2^-50, so the two sides' ratio is off by less than
+    // 2^-49. A pair is discarded only when lhs_d < rhs_d·(1 − 1e-12),
+    // and 1e-12 ≈ 2^-40 ≫ 2^-49: a discarded pair PROVABLY fails the
+    // exact test, with no premise on |q_i| or dim. The surviving pair
+    // set (decided by the unchanged decimal conjunct, which the DuckDB
+    // oracle replays in HUGEINT) is therefore identical. Conjuncts
+    // evaluate left-to-right, so the decimal arithmetic runs only on the
     // passing pairs plus a ≤1e-12-relative borderline band.
     val lhsD = F.col("__dot").cast("double") * F.col("__dot").cast("double") *
       F.lit(q2.toDouble)

@@ -337,7 +337,7 @@ object Sketches {
   private def readKmvParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, String, Seq[String], String) = {
     val row =
-      try spark.read.parquet(s"$path/_params").head()
+      try StoreLayout.readParams(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
@@ -635,7 +635,7 @@ object Sketches {
   private def readCmsParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, String, String) = {
     val row =
-      try spark.read.parquet(s"$path/_params").head()
+      try StoreLayout.readParams(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
@@ -1068,7 +1068,7 @@ object Sketches {
   private def readHllParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (String, Seq[String], String) = {
     val row =
-      try spark.read.parquet(s"$path/_params").head()
+      try StoreLayout.readParams(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
@@ -1271,7 +1271,7 @@ object Sketches {
   private def readHistParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Seq[String], String) = {
     val row =
-      try spark.read.parquet(s"$path/_params").head()
+      try StoreLayout.readParams(spark, path)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
@@ -1568,7 +1568,7 @@ object Sketches {
     val curSet = before.toSet
     if (before.isEmpty) return
     // step 2: fold exactly the manifest's files
-    fold(spark.read.parquet(before.map(n => new Path(p, n).toString): _*))
+    fold(StoreLayout.readFiles(spark, fs, p, before))
       .coalesce(math.max(1, numFiles))
       .write.parquet(new Path(tmp, "data").toString)
     // step 3: move the folded parts in (invisible until the commit)

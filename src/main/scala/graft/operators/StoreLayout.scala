@@ -55,6 +55,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[requireBatchNotPruned]]) instead of silently double-counting —
   * retries within the grace window (any sane retry policy is
   * seconds-to-minutes) land exactly once, later ones error.
+  *
+  * Metadata cache: the driver keeps ONE map ([[metaCache]]) of small,
+  * unchanging store metadata, so a warm read of a store's metadata
+  * starts no Spark job. Each entry is checked on every call against a
+  * fingerprint taken with plain FS calls:
+  *  - `_params` rows ([[readParams]]) and the ANN side tables (`_meta` +
+  *    `_centroids`, `_codebooks`; [[cachedSide]]) on the (name, mtime,
+  *    length) listing of their side directories;
+  *  - the inferred schema of an explicit-file read ([[readFiles]]) on the
+  *    first file's path, mtime and length;
+  *  - the `_appends_pruned` ledger bloom on its file's (name, mtime,
+  *    length), on the local FS only.
+  * A load that throws caches nothing. The map is an access-order LRU of
+  * 256 entries. Rows that carry big artifacts (the bloom bits of
+  * [[Contamination]]'s and [[Dedup]]'s gate artifacts) are read
+  * uncached; the ledger bloom is the one large value (about 3.4 MiB).
   */
 private[graft] object StoreLayout {
 
@@ -65,6 +81,94 @@ private[graft] object StoreLayout {
   def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  // ---- driver-side metadata cache ------------------------------------------
+
+  /** The one driver-side metadata cache: key -> (fingerprint, value). A
+    * hit needs the caller's freshly computed fingerprint to equal the
+    * stored one, so an entry can be stale only while its files are
+    * unchanged. A true access-order LRU at 256 entries: keys are store
+    * paths, and tests create many temp stores.
+    */
+  private[graft] val metaCache: java.util.Map[String, (String, AnyRef)] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, (String, AnyRef)](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
+          size > 256
+      })
+
+  /** `load` under `key`, reused while `fp` matches. A throwing load
+    * caches nothing, so errors stay loud on every call.
+    */
+  private[graft] def cached[T <: AnyRef](key: String, fp: String)(
+      load: => T): T =
+    metaCache.get(key) match {
+      case (oldFp, v) if oldFp == fp => v.asInstanceOf[T]
+      case _ =>
+        val v = load
+        metaCache.put(key, (fp, v))
+        v
+    }
+
+  /** (name, mtime, length) of every file under `path`'s side directories
+    * `dirs`, from one listing each; an absent directory has its own
+    * token, so creating it changes the fingerprint.
+    */
+  private def sideFingerprint(fs: FileSystem, p: Path,
+      dirs: Seq[String]): String =
+    dirs.flatMap { d =>
+      try fs.listStatus(new Path(p, d)).toSeq
+        .map(st => s"${st.getPath.getName}:${st.getModificationTime}:${st.getLen}")
+      catch { case _: java.io.FileNotFoundException => Seq(s"$d:absent") }
+    }.sorted.mkString("|")
+
+  /** A small side table of the store at `path` (`_params`, `_centroids`,
+    * ...), loaded by `load` and reused while the listing of `dirs` is
+    * unchanged. Every rewrite of a side table writes new part-file names,
+    * so it always misses.
+    */
+  private[graft] def cachedSide[T <: AnyRef](spark: SparkSession,
+      path: String, kind: String, dirs: Seq[String])(load: => T): T = {
+    val (fs, p) = fsFor(spark, path)
+    cached(s"$path#$kind", sideFingerprint(fs, p, dirs))(load)
+  }
+
+  /** The one row of the store's `_params` sidecar. Throws Spark's
+    * AnalysisException when there is none; callers turn it into their
+    * own error and check the row themselves.
+    */
+  def readParams(spark: SparkSession, path: String): org.apache.spark.sql.Row =
+    cachedSide(spark, path, "params", Seq("_params")) {
+      spark.read.parquet(s"$path/_params").head()
+    }
+
+  /** Read exactly `files` (names relative to `dir`), with `basePath` for a
+    * hive-partitioned layout so its partition columns are discovered.
+    * The schema is inferred once and reused while the first file's
+    * (mtime, length) is unchanged; a cached schema makes the read start
+    * no Spark job. An empty list throws the same UNABLE_TO_INFER_SCHEMA
+    * error a directory read of an unbuilt store does; a missing first
+    * file reads uncached, so Spark's own path error surfaces.
+    */
+  def readFiles(spark: SparkSession, fs: FileSystem, dir: Path,
+      files: Seq[String], basePath: Option[String] = None): DataFrame = {
+    val paths = files.map(n => new Path(dir, n).toString)
+    def reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    val fp = paths.headOption.flatMap { f =>
+      try {
+        val st = fs.getFileStatus(new Path(f))
+        Some(s"${st.getModificationTime}:${st.getLen}")
+      } catch { case _: java.io.FileNotFoundException => None }
+    }
+    fp match {
+      case None => reader.parquet(paths: _*)
+      case Some(fp) =>
+        val key = s"${paths.head}#schema${basePath.fold("")("@" + _)}"
+        val schema = cached(key, fp)(reader.parquet(paths: _*).schema)
+        reader.schema(schema).parquet(paths: _*)
+    }
   }
 
   /** Data file names a DIRECTORY LISTING would serve: non-underscore,
@@ -304,10 +408,9 @@ private[graft] object StoreLayout {
     */
   def readStoreAt(spark: SparkSession, path: String, version: Long): DataFrame = {
     val (fs, p) = fsFor(spark, path)
-    val files = readManifestChecked(fs, p, version)
     // zero files → the same UNABLE_TO_INFER_SCHEMA surface as
     // readStore's empty-current-manifest path
-    spark.read.parquet(files.map(n => new Path(p, n).toString): _*)
+    readFiles(spark, fs, p, readManifestChecked(fs, p, version))
   }
 
   /** Manifest `version`'s file list, with a retention-aware error when
@@ -341,8 +444,7 @@ private[graft] object StoreLayout {
     val (fs, p) = fsFor(spark, path)
     currentManifest(fs, p) match {
       case None => spark.read.parquet(path)
-      case Some((_, files)) =>
-        spark.read.parquet(files.map(n => new Path(p, n).toString): _*)
+      case Some((_, files)) => readFiles(spark, fs, p, files)
     }
   }
 
@@ -613,30 +715,19 @@ private[graft] object StoreLayout {
   private val BloomCapacity = 1000000L
   private val BloomFpp = 1e-6
 
-  // per-store bloom cache, validated against the file's (mtime, len)
-  // status on every call: the bloom only changes at marker-prune time,
-  // and without the cache every batchId append would re-read megabytes.
-  // LOCAL-FS ONLY: there the writer lease serializes cross-JVM writers,
-  // so a same-(mtime,len) rewrite behind a cached reader's back cannot
-  // happen; on shared filesystems (HDFS), where multi-JVM appenders are
-  // allowed and two prunes could land inside one mtime tick, every read
-  // goes to the file. Bounded by an access-order LRU at 256 entries like
-  // Similarity.sideCache (r16 verdict nit: the former wholesale clear
-  // made one unlucky append repay every other store's bloom read).
-  private[graft] val bloomCache: java.util.Map[
-      String, (String, org.apache.spark.util.sketch.BloomFilter)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          String, (String, org.apache.spark.util.sketch.BloomFilter)](
-          64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            String, (String, org.apache.spark.util.sketch.BloomFilter)])
-            : Boolean = size > 256
-      })
-
   private def fsScheme(fs: FileSystem): String =
     Option(fs.getUri).flatMap(u => Option(u.getScheme))
       .map(_.toLowerCase).getOrElse("")
+
+  // the ledger bloom is cached in [[metaCache]] (the bloom only changes at
+  // marker-prune time, and without the cache every batchId append would
+  // re-read megabytes), on the LOCAL FS ONLY: there the writer lease
+  // serializes cross-JVM writers, so a same-(name, mtime, len) rewrite
+  // behind a cached reader's back cannot happen; on shared filesystems
+  // (HDFS), where multi-JVM appenders are allowed and two prunes could
+  // land inside one mtime tick, every read goes to the file
+  private def bloomCacheable(fs: FileSystem): Boolean = fsScheme(fs) == "file"
+  private def bloomKey(dir: Path): String = s"$dir#bloom"
 
   // The ledger is VERSIONED since r17: `_appends_pruned-%08d`, committed
   // create-exclusive like manifests, readers resolve the newest. The
@@ -680,20 +771,15 @@ private[graft] object StoreLayout {
       // the NAME is part of the fingerprint: versioned commits never
       // rewrite a file in place, so (name, mtime, len) is stable
       val fp = s"${f.getName}:${st.getModificationTime}:${st.getLen}"
-      val cacheable = fsScheme(fs) == "file"
-      (if (cacheable) bloomCache.get(dir.toString) else null) match {
-        case (oldFp, b) if oldFp == fp => Some(b)
-        case _ =>
-          try {
-            val in = fs.open(f)
-            val b =
-              try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-              finally in.close()
-            if (cacheable)
-              bloomCache.put(dir.toString, (fp, b)) // LRU-bounded at 256
-            Some(b)
-          } catch { case _: java.io.FileNotFoundException => None }
+      def load(): org.apache.spark.util.sketch.BloomFilter = {
+        val in = fs.open(f)
+        try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
+        finally in.close()
       }
+      try Some(
+        if (bloomCacheable(fs)) cached(bloomKey(dir), fp)(load())
+        else load())
+      catch { case _: java.io.FileNotFoundException => None }
     }
   }
 
@@ -824,9 +910,9 @@ private[graft] object StoreLayout {
               s"v${curVer + 1} is missing ids — a concurrent overwrite; " +
               "retrying the commit")
           } else {
-          if (fsScheme(fs) == "file") {
+          if (bloomCacheable(fs)) {
             val st = fs.getFileStatus(target)
-            bloomCache.put(dir.toString,
+            metaCache.put(bloomKey(dir),
               (s"${target.getName}:${st.getModificationTime}:${st.getLen}",
                 bloom))
           }

@@ -29,18 +29,10 @@ object QueryDump {
       fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = graft.SparkEntry.oracleSql
       .filter { case (k, _) => names.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => graft.SparkEntry.jsonString(k) + ": " + graft.SparkEntry.jsonString(v) }
+      .mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -477,10 +477,11 @@ class SelectionSpec extends AnyFunSuite with Matchers {
       w.keySet shouldBe twoMd5.keySet
       w.foreach { case (id, sc) => sc shouldBe twoMd5(id) +- 1e-9 }
     }
-    // null-id docs (dropped by the feature stage on both paths, excluded
-    // from prior only when the conditions say so) and null LABELS (count
-    // to neither class but the doc still counts in the prior denominator
-    // guard shape) must agree between the forms
+    // null-id docs, outside the training split and inside it (the
+    // null-id doc carries the only training "zulu", which a scored doc
+    // holds), and null LABELS (count to neither class but the doc still
+    // counts in the prior denominator guard shape) must agree between
+    // the forms
     val withNulls = Seq(
       (Some(1L), "alpha beta gamma data", Some(true)),
       (Some(2L), "alpha data table", Some(false)),
@@ -489,17 +490,21 @@ class SelectionSpec extends AnyFunSuite with Matchers {
       (Some(160L), "alpha beta zulu", Some(true)),
       (Some(161L), "data table omega", Some(false)))
       .toDF("id", "text", "lab")
-    val twoN = Selection.nbClassifierScore(
-        withNulls.filter(F.col("id") < 160),
-        withNulls.filter(F.col("id") >= 160),
-        "id", "text", "lab", numBuckets = 0)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val wN = Selection.nbClassifierScoreWithin(withNulls, "id", "text",
-        trainCond = F.col("id") < 160, labelCond = F.col("lab"),
-        scoreCond = F.col("id") >= 160, numBuckets = 0)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    wN.keySet shouldBe twoN.keySet
-    wN.foreach { case (id, sc) => sc shouldBe twoN(id) +- 1e-12 }
+    for (train <- Seq(F.col("id") < 160,
+        F.col("id").isNull || F.col("id") < 160))
+      withClue(s"trainCond $train: ") {
+        val twoN = Selection.nbClassifierScore(withNulls.filter(train),
+            withNulls.filter(F.col("id") >= 160),
+            "id", "text", "lab", numBuckets = 0)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val wN = Selection.nbClassifierScoreWithin(withNulls, "id", "text",
+            trainCond = train, labelCond = F.col("lab"),
+            scoreCond = F.col("id") >= 160, numBuckets = 0)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        wN.keySet shouldBe Set(160L, 161L)
+        wN.keySet shouldBe twoN.keySet
+        wN.foreach { case (id, sc) => sc shouldBe twoN(id) +- 1e-12 }
+      }
   }
 
   test("NB hashed model reproduces exact scores at collision-free width") {

@@ -1561,4 +1561,172 @@ class SketchSpec extends AnyFunSuite with Matchers {
     Sketches.histQuantilesFromStore(spark, hdir, qs).collect().toSet shouldBe
       Sketches.logHistQuantiles(h1, Nil, "v", qs).collect().toSet
   }
+
+  // ---- driver-side metadata cache (StoreLayout.metaCache) -----------------
+
+  /** Spark jobs started while `body` runs. The listener bus is async, so
+    * the count is read once it has been stable for 300 ms.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      var (last, stable, waited) = (-1, 0, 0)
+      while (stable < 3 && waited < 5000) {
+        val cur = n.get
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+        Thread.sleep(100)
+        waited += 100
+      }
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def tmpStore(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString + "/store"
+
+  test("warm store reads start no Spark job before their action; a warm " +
+    "append starts only its write's jobs") {
+    import graft.operators.Dedup
+    val o = Tables.orders(spark, sf)
+    val even = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 0)
+    val odd = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 1)
+    val hll = tmpStore("warm-hll")
+    Sketches.buildHllStore(even, Seq("o_orderstatus"), "o_custkey", hll)
+    Sketches.appendToHllStore(odd, hll, batchId = Some("b0"))
+    val hist = tmpStore("warm-hist")
+    Sketches.buildHistStore(even, Seq("o_orderstatus"), "o_totalprice", hist)
+    // cold: params and schema are loaded; warm: both come from the cache
+    val cold = Sketches.hllDistinctFromStore(spark, hll).collect().toSet
+    val (warm, hllJobs) = jobsDuring(Sketches.hllDistinctFromStore(spark, hll))
+    hllJobs shouldBe 0
+    warm.collect().toSet shouldBe cold
+    val qs = Seq(0.5, 0.9)
+    val coldQ = Sketches.histQuantilesFromStore(spark, hist, qs).collect().toSet
+    val (warmQ, histJobs) =
+      jobsDuring(Sketches.histQuantilesFromStore(spark, hist, qs))
+    histJobs shouldBe 0
+    warmQ.collect().toSet shouldBe coldQ
+    // the append's jobs are exactly those of writing its batch's sketch
+    val (_, writeJobs) = jobsDuring(
+      Sketches.hllSketch(odd, Seq("o_orderstatus"), "o_custkey")
+        .write.parquet(tmpStore("warm-hll-ref")))
+    val (_, appendJobs) =
+      jobsDuring(Sketches.appendToHllStore(odd, hll, batchId = Some("b1")))
+    appendJobs shouldBe writeJobs
+    // the band-index gate's build phase: params and both tables' schemas
+    val docs = Tables.documents(spark, sf)
+    val band = tmpStore("warm-band")
+    Dedup.saveBandIndex(docs.filter(F.col("doc_id") % 2 === 0), "doc_id",
+      "text", band)
+    val batch = docs.filter(F.col("doc_id") % 2 === 1)
+    val coldGate = Dedup.dedupAgainstIndex(batch, "doc_id", "text", band)
+      .select("doc_id").collect().toSet
+    val (warmGate, gateJobs) =
+      jobsDuring(Dedup.dedupAgainstIndex(batch, "doc_id", "text", band))
+    gateJobs shouldBe 0
+    warmGate.select("doc_id").collect().toSet shouldBe coldGate
+  }
+
+  test("metadata cache follows a rebuild at the same path: new params, " +
+    "new schema, even where a data file name repeats") {
+    val o = Tables.orders(spark, sf)
+    val even = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 0)
+    val odd = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 1)
+    val dir = tmpStore("rebuild")
+    // build (v1), append (v2), compact (v3): the folded part's name is
+    // `compact-v00000003-p00000.parquet` on both builds below
+    def buildFold(group: String): Unit = {
+      Sketches.buildHllStore(even, Seq(group), "o_custkey", dir)
+      Sketches.appendToHllStore(odd, dir)
+      Sketches.compactHllStore(spark, dir)
+    }
+    def served = Sketches.hllDistinctFromStore(spark, dir)
+    buildFold("o_orderstatus")
+    served.schema("o_orderstatus").dataType shouldBe
+      org.apache.spark.sql.types.StringType
+    served.count() shouldBe 3
+    buildFold("o_custkey")
+    val (fs, p) = graft.operators.StoreLayout.fsFor(spark, dir)
+    graft.operators.StoreLayout.currentManifest(fs, p).get._2 shouldBe
+      Seq("compact-v00000003-p00000.parquet")
+    val after = served
+    after.columns should not contain "o_orderstatus"
+    after.schema("o_custkey").dataType shouldBe
+      org.apache.spark.sql.types.LongType
+    after.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap shouldBe
+      Sketches.hllDistinct(o, Seq("o_custkey"), "o_custkey")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  }
+
+  test("cached-schema store reads == a plain parquet read of the same " +
+    "files, for every store kind and an IVF index") {
+    import graft.operators.{Dedup, Similarity, StoreLayout}
+    val o = Tables.orders(spark, sf)
+    val docs = Tables.documents(spark, sf)
+    val even = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 0)
+    val odd = o.filter(F.pmod(F.col("o_orderkey"), F.lit(2L)) === 1)
+    val toks = docs.select(F.explode(
+      graft.operators.TextAnalysis.tokens(F.col("text"))).as("tok"))
+    val kmv = tmpStore("diff-kmv")
+    Sketches.buildKmvStore(even, Seq("o_orderstatus"), "o_custkey", 16, kmv)
+    Sketches.appendToKmvStore(odd, kmv)
+    val cms = tmpStore("diff-cms")
+    Sketches.buildCmsStore(toks, "tok", 4, 256, cms)
+    Sketches.appendToCmsStore(toks.limit(50), cms)
+    val hll = tmpStore("diff-hll")
+    Sketches.buildHllStore(even, Seq("o_orderstatus"), "o_custkey", hll)
+    Sketches.appendToHllStore(odd, hll)
+    val hist = tmpStore("diff-hist")
+    Sketches.buildHistStore(even, Seq("o_orderstatus"), "o_totalprice", hist)
+    Sketches.appendToHistStore(odd, hist)
+    val band = tmpStore("diff-band")
+    Dedup.saveBandIndex(docs, "doc_id", "text", band)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def same(got: org.apache.spark.sql.DataFrame,
+        ref: org.apache.spark.sql.DataFrame): Unit = {
+      got.schema shouldBe ref.schema
+      rows(got) shouldBe rows(ref)
+    }
+    for (path <- Seq(kmv, cms, hll, hist, band, s"$band/_bands"))
+      withClue(s"$path: ") {
+        val (fs, p) = StoreLayout.fsFor(spark, path)
+        val (ver, files) = StoreLayout.currentManifest(fs, p).get
+        val ref = spark.read.parquet(files.map(n => s"$path/$n"): _*)
+        // the second read of each face is served from the cached schema
+        for (_ <- 1 to 2) {
+          same(StoreLayout.readStore(spark, path), ref)
+          same(StoreLayout.readStoreAt(spark, path, ver), ref)
+        }
+        if (ver > 1) {
+          val v1 = StoreLayout.readManifestChecked(fs, p, 1L)
+          same(StoreLayout.readStoreAt(spark, path, 1L),
+            spark.read.parquet(v1.map(n => s"$path/$n"): _*))
+        }
+      }
+    // the hive-partitioned IVF index keeps `__list` as its inferred int
+    val emb = Tables.embeddings(spark, sf)
+    val ivf = tmpStore("diff-ivf")
+    Similarity.buildIvfIndex(emb.filter(F.col("vec_id") % 2 === 0),
+      "vec_id", "embedding", ivf, nCentroids = 4)
+    Similarity.appendToIvfIndex(emb.filter(F.col("vec_id") % 2 === 1),
+      "vec_id", "embedding", ivf)
+    val (fs, p) = StoreLayout.fsFor(spark, ivf)
+    val (ver, files) = StoreLayout.currentManifest(fs, p).get
+    val ref = spark.read.option("basePath", ivf)
+      .parquet(files.map(n => s"$ivf/$n"): _*)
+    ref.schema("__list").dataType shouldBe
+      org.apache.spark.sql.types.IntegerType
+    for (_ <- 1 to 2) {
+      same(Similarity.readIndex(spark, ivf), ref)
+      same(Similarity.readIndex(spark, ivf, Some(ver)), ref)
+    }
+  }
 }
