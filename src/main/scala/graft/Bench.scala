@@ -51,16 +51,9 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val load = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("32")
 
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -113,7 +106,7 @@ object Bench {
     // cell in bench_detail.json is another warm rep, not a cold
     // execution. Acceptable: q1_agg's cold/warm self-diagnosis signal
     // is the one sacrificed to gain the ambient signal for all 100+
-    // others (and its true cold lives in every TimeQuery rep1).
+    // others (and its true cold lives in every `Probe time` rep 1).
     // Sample positions are stamped alongside the samples (r18,
     // round-17 verdict #1): tools/bench_flags.py judges each flag
     // against the control samples BRACKETING its run position, so the

@@ -26,6 +26,25 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
 
+  /** The local session every main runs on: `local[$SPARK_GRAFT_CPUS]`
+    * (`defaultCpus` when unset) with as many shuffle partitions as cpus,
+    * UTC session time, the UI off and log level WARN. `conf` pairs are
+    * set after these, so a main can add its own (SkewProbe's AQE skew
+    * thresholds, the fallback probe's `spark.sql.codegen.fallback`).
+    */
+  def localSession(defaultCpus: String, conf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** `s` as a JSON string literal: quote, backslash and every control
     * character (< 0x20) escaped, so a tab or quote in a query name or
     * its SQL cannot break a consumer's JSON parse.

@@ -659,20 +659,21 @@ object Selection {
 
   /** Score a frame against a persisted NB model ([[saveNbModel]]). The
     * only driver-side read is the feature flavor (`__numBuckets`) from the
-    * 1-row sidecar — it decides the query PLAN (exact strings vs hashed
-    * kernel), so it cannot stay lazy; bounded by construction (same class
-    * as the IVF centroid load). The llr table itself streams through the
-    * feature join, never the driver.
+    * 1-row sidecar (`StoreLayout.readParams`, cached while the sidecar's
+    * files are unchanged) — it decides the query PLAN (exact strings vs
+    * hashed kernel), so it cannot stay lazy; bounded by construction (same
+    * class as the IVF centroid load). The llr table itself streams through
+    * the feature join, never the driver.
     */
   def scoreWithNbModel(spark: org.apache.spark.sql.SparkSession,
       path: String, toScore: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val params = spark.read.parquet(s"$path/_params")
-    val row = params.head()
+    val row = StoreLayout.readParams(spark, path)
     graft.functions.Tok.checkHashFamily(row, path)
     val numBuckets = row.getAs[Int]("__numBuckets")
     nbScoreJoin(docFeatures(toScore, idCol, textCol, numBuckets),
-      spark.read.parquet(s"$path/llr"), params, idCol)
+      spark.read.parquet(s"$path/llr"), spark.read.parquet(s"$path/_params"),
+      idCol)
   }
 
   /** Streaming face of [[scoreWithNbModel]]: per-occurrence feature rows
@@ -688,10 +689,10 @@ object Selection {
       path: String, stream: DataFrame, idCol: String, textCol: String,
       tsCol: String, width: String = "1 hour",
       lateness: String = "1 hour"): DataFrame = {
-    val params = spark.read.parquet(s"$path/_params")
-    val paramsRow = params.head()
+    val paramsRow = StoreLayout.readParams(spark, path)
     graft.functions.Tok.checkHashFamily(paramsRow, path)
     val numBuckets = paramsRow.getAs[Int]("__numBuckets")
+    val params = spark.read.parquet(s"$path/_params")
     val s = F.col("__s")
     val unseen =
       F.log(F.col("__tn") + s * F.col("__v")) -

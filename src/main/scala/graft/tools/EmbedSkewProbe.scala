@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Embedding cluster-MASS skew probe (round-14 verdict "next round
@@ -30,14 +29,7 @@ object EmbedSkewProbe {
     val dirs = args(0).split(",")
     val rowsPerCluster = if (args.length > 1) args(1).toLong else 250L
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     import graft.operators.Similarity
 
     def medianOf(run: () => Unit): Double = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 import graft.operators.{Similarity, StoreLayout}
@@ -24,14 +23,7 @@ object IndexAmpProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val n = if (args.length > 1) args(1).toInt else 50
     val acp = if (args.length > 2) args(2).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("32")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(F.col("vec_id") < 5)

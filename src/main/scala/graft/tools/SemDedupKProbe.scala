@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SemDedup cluster-count scaling probe (round-13, SCALING.md second
@@ -17,14 +16,7 @@ object SemDedupKProbe {
     val dir = args(0)
     val ks = (if (args.length > 1) args(1) else "8,80").split(",").map(_.toInt)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     import graft.operators.Similarity
     val emb = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))

@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic: synthesize a hot-key join (90% of fact rows on ONE key)
@@ -19,28 +17,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object SkewProbe {
   @volatile var lastPlan: String = ""
 
-  def finalPlanOf(qe: QueryExecution): String =
-    qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 2000000L
     val saltF = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "1MB")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512KB")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("8",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1MB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512KB")
 
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = { lastPlan = finalPlanOf(qe) }
+          durationNs: Long): Unit =
+        lastPlan = FallbackAudit.finalPlan(qe).toString
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     })

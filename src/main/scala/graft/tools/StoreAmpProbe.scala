@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 import graft.operators.Sketches
@@ -23,14 +22,7 @@ object StoreAmpProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val n = if (args.length > 1) args(1).toInt else 100
     val acp = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("32")
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val batch = orders.filter(F.col("o_orderkey") % 10 === 1)

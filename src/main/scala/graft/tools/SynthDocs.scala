@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * `documents`/`embeddings` at 500 rows below sf0.1, so its dirs give
   * the document family only ONE real ×10 decade (sf0.01 → sf0.1). This
   * tool generates statistically-matched corpora at ANY size so
-  * ScalingProbe can measure a second real decade (5k → 50k docs) —
+  * `Probe time` can measure a second real decade (5k → 50k docs) —
   * SCALING.md holds the committed table.
   *
   * Matched to the driver corpus at sf0.1 (measured): the same 31-word
@@ -174,14 +174,7 @@ object SynthDocs {
     val seed = if (args.length > 3) args(3).toLong else 42L
     val zipf = args.length > 4 && args(4) == "zipf"
     val zipfVecMass = args.length > 5 && args(5) == "zipfvec"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession("32")
     generate(spark, outDir, nDocs, nVecs, seed, zipf, zipfVecMass)
     println(s"[synthdocs] wrote $nDocs docs + $nVecs vecs to $outDir " +
       s"(seed $seed, sources ${if (zipf) "zipf" else "uniform"}, " +

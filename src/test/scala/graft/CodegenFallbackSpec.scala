@@ -23,11 +23,11 @@ import graft.tools.FallbackAudit
   *     vetted allowlist below — a NEW interpreted built-in sneaking into
   *     a query is a visible diff, not a silent slowdown.
   *
-  * `graft.tools.FallbackProbe` is the matching diagnostic main (run it
-  * at sf0.01 to reproduce the audit outside ScalaTest; this suite uses
+  * `graft.tools.Probe fallback` is the matching diagnostic (run it at
+  * sf0.01 to reproduce the audit outside ScalaTest; this suite uses
   * sf0.001 so the pin stays cheap — the fallback EXPRESSION SET of a
   * plan is scale-independent even where AQE's join strategy is not, and
-  * the probe's sf0.01 run is how the allowlist below was gathered).
+  * a probe run at sf0.01 is how the allowlist below was gathered).
   */
 class CodegenFallbackSpec extends AnyFunSuite with Matchers {
 
@@ -42,7 +42,7 @@ class CodegenFallbackSpec extends AnyFunSuite with Matchers {
   val sf = "/root/testdata/sf0.001"
 
   /** Interpreted-by-design Catalyst built-ins observed across the
-    * registry (FallbackProbe at sf0.01, round 11), each with why it is
+    * registry (the fallback probe at sf0.01, round 11), each with why it is
     * acceptable where it appears:
     *  - higher-order functions (ArrayFilter/Transform/Aggregate/Sort and
     *    their lambda scaffolding): per-element lambdas over bounded

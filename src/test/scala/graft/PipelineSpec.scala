@@ -6,6 +6,7 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.operators.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.streaming.Streams
+import graft.tools.FallbackAudit
 
 /** Tests for the M8 pipeline operators (dedup, similarity, text analysis,
   * multimodal, streaming) on the sf0.001 driver testdata plus synthetic
@@ -196,13 +197,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // The shingle table feeds banding + both verify sides; the explicit
     // repartition(id) materialization point makes all three consumers
     // reuse ONE exchange at runtime instead of re-scanning the corpus.
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     "FileScan parquet".r.findAllIn(p).size shouldBe 1
     p should include("ReusedExchange")
   }
@@ -216,13 +213,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // non-nullable size (sizeNonNull) opt out; pin the result: exactly one
     // kernel occurrence in each FINAL adaptive plan (scan metadata echoes
     // pushed filters, so a regression shows up as extra occurrences).
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def finalPlan(q: org.apache.spark.sql.DataFrame): String = {
       q.collect()
-      q.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-        case o => o.toString
-      }
+      FallbackAudit.finalPlan(q).toString
     }
     val shingleKernel = "shingle_hashes"
     val tokenizerKernel = "split(lower"
@@ -241,14 +234,10 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("round-5 operators: kernel-once + no-cartesian plan pins") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.operators.Selection
     def finalPlan(q: org.apache.spark.sql.DataFrame): String = {
       q.collect()
-      q.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-        case o => o.toString
-      }
+      FallbackAudit.finalPlan(q).toString
     }
     val tok = java.util.regex.Pattern.quote("split(lower")
     // bigram LM: ONE corpus scan, ONE tokenizer evaluation — every count
@@ -927,13 +916,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // canonical equality (e.g. a branch-specific filter) would silently
     // multiply full-corpus scans at 100 TB — this pins it.
     import graft.operators.Pipelines
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = Pipelines.cleanCorpus(docs, "doc_id", "text")
     q.collect()
-    val finalPlan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case p => p.toString
-    }
+    val finalPlan = FallbackAudit.finalPlan(q).toString
     finalPlan should include("ReusedExchange")
     "FileScan parquet".r.findAllIn(finalPlan).size should be <= 2
   }
@@ -946,13 +931,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // dedup window's shuffle, the worse trade at corpus scale. Everything
     // else still reuses stages (ReusedExchange present).
     import graft.operators.Pipelines
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = Pipelines.curateForTraining(docs, "doc_id", "text")
     q.collect()
-    val plan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case o => o
-    }
+    val plan = FallbackAudit.finalPlan(q)
     val p = plan.toString
     "FileScan parquet".r.findAllIn(p).size should be <= 2
     p should include("ReusedExchange")
@@ -1469,14 +1450,10 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // of (table, bucket) structs) and the repartition materialization
     // points let the scoring joins reuse the same exchanges — the N-branch
     // join-per-table formulation scanned each side once per table.
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = Similarity.lshTopK(emb.filter(F.col("vec_id") < 10), emb,
       "vec_id", "embedding", k = 5, dim = 64)
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     "FileScan parquet".r.findAllIn(p).size should be <= 2
     p should include("ReusedExchange")
   }
@@ -2170,13 +2147,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // (tokenize+explode) + one text-bearing scan is the 100 TB contract;
     // the join itself stays AQE-skew-splittable (a window-based df would
     // funnel a stop-word's rows through one task).
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = TextAnalysis.tfIdf(docs, "doc_id", "text")
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     "Generate explode".r.findAllIn(p).size shouldBe 1
     "FileScan parquet \\[doc_id".r.findAllIn(p).size shouldBe 1
     p should include("ReusedExchange")
@@ -2213,13 +2186,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // guard so pruning can't break canonical identity — same contract as
     // tf-idf, one text-bearing scan, one Generate, ReusedExchange for the
     // shared tf shuffle.
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = TextAnalysis.bm25(docs, "doc_id", "text")
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     "Generate explode".r.findAllIn(p).size shouldBe 1
     "FileScan parquet \\[doc_id".r.findAllIn(p).size shouldBe 1
     p should include("ReusedExchange")
@@ -2250,13 +2219,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // the corpus-frequency aggregate, ctf feeds the join and the 1-row
     // total; the pruning-defeating guards keep every consumer canonically
     // identical so AQE computes tf ONCE. The only hint is the 1-row total.
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = TextAnalysis.unigramLogLoss(docs, "doc_id", "text")
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     "Generate explode".r.findAllIn(p).size shouldBe 1
     "FileScan parquet \\[doc_id".r.findAllIn(p).size shouldBe 1
     p should include("ReusedExchange")
@@ -2687,7 +2652,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
 
   test("exactSubstrDedup splice tail: fused stats kernel runs ONCE " +
     "(no triple tokenization), and the SQL face agrees with splice_tokens") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // r17 verdict finding: n_tokens / n_removed as separate tokenCount
     // columns re-ran the tokenizer twice over the corpus-sized final
     // projection. The fused splice_tokens_stats struct must appear in
@@ -2698,10 +2662,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     val q = Dedup.exactSubstrDedup(docs, "doc_id", "text", k = 8,
       hashed = true)
     q.collect()
-    val plan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val plan = FallbackAudit.finalPlan(q).toString
     "splice_tokens_stats".r.findAllIn(plan).size shouldBe 1
     "splice_tokens\\(".r.findAllIn(plan).size shouldBe 0
     "tokenCount".r.findAllIn(plan).size shouldBe 0
@@ -2781,7 +2742,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     "the batch, batch-internal repeats survive; fused splice_chars " +
     "kernel runs ONCE in the plan") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val span = "0sharedboilerplateblock0" // single token, 24 chars
     val corpus = Seq(
       (100L, s"curated doc containing $span inside it"),
@@ -2811,10 +2771,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     val q = Dedup.exactSubstrDedupChars(docs, "doc_id", "text", k = 12,
       hashed = true)
     q.collect()
-    val plan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val plan = FallbackAudit.finalPlan(q).toString
     "splice_chars".r.findAllIn(plan).size shouldBe 1
     // the window-key kernel runs once per consumer of the position rows
     // (the occurrence-count aggregate and the semi-join) — the same
@@ -2887,7 +2844,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   test("exactSubstr deployment rule #1: bucketing the corpus by id " +
     "removes every doc_id exchange from the splice join-back (the " +
     "SCALING.md r18 post-transition mitigation, plan-pinned)") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // Past the broadcast threshold (SCALING.md r18 decade: >~500k docs)
     // the join-back becomes a SortMergeJoin and the corpus TEXT crosses
     // an exchange. Deployment rule #1 says bucketing the corpus by id
@@ -2901,10 +2857,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     import org.apache.spark.sql.execution.joins.ShuffledJoin
     def finalPlanOf(df: org.apache.spark.sql.DataFrame): SparkPlan = {
       df.collect()
-      df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case o => o
-      }
+      FallbackAudit.finalPlan(df)
     }
     // QueryStageExec nodes are LEAVES to TreeNode traversal (Spark 4's
     // final plan roots in ResultQueryStageExec) — expand through their
@@ -3983,7 +3936,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("Dedup.exact window runs over the (hash, key) projection only") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // plant real duplicates: with zero losers AQE folds the empty
     // broadcast anti-join away and the final plan would have no window
     // to inspect at all
@@ -3991,10 +3943,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       docs.select((F.col("doc_id") + 100000L).as("doc_id"), F.col("text")))
     val q = Dedup.exact(dup, "text", "doc_id")
     q.collect()
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case o => o
-    }
+    val p = FallbackAudit.finalPlan(q)
     // SCALE.md's claim, pinned directly on exact(): the loser window
     // consumes a two-column (hash, key) projection — document text never
     // enters the window exchange (the corpus-sized-shuffle killer the
@@ -4108,7 +4057,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("gopher + repetition gates compose into ONE scan, each kernel once") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // the full MassiveText gate = structural battery ∧ repetition battery;
     // both are scan-side kernel projections, so chaining the filter faces
     // must stay a single corpus scan with each kernel evaluated once —
@@ -4116,10 +4064,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     val q = graft.operators.Selection.gopherFilter(
       TextAnalysis.repetitionFilter(docs, "text"), "text")
     q.collect()
-    val plan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val plan = FallbackAudit.finalPlan(q).toString
     "rep_stats".r.findAllIn(plan).size shouldBe 1
     "gopher_stats".r.findAllIn(plan).size shouldBe 1
     "FileScan parquet".r.findAllIn(plan).size shouldBe 1
@@ -4195,13 +4140,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("multi-signal text queries tokenize exactly ONCE per row") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def finalPlan(q: org.apache.spark.sql.DataFrame): String = {
       q.collect()
-      q.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-        case o => o.toString
-      }
+      FallbackAudit.finalPlan(q).toString
     }
     // HOF lambdas are CSE-exempt (SPARK-35410): inlining tokens(text) into
     // each signal re-runs the tokenizer per signal per row, interpreted.
@@ -4303,7 +4244,6 @@ class PipelineSpec extends AnyFunSuite with Matchers {
 
   test("dedupLines: corpus-wide first-occurrence line dedup, map-side pruned") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val df = Seq(
       (1L, "alpha\nFOOTER\nbeta"),
       (2L, "gamma\nFOOTER"),
@@ -4315,10 +4255,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     out shouldBe Map(1L -> "alpha\nFOOTER\nbeta", 2L -> "gamma")
     // the rank-1 filter compiles to WindowGroupLimit: a boilerplate line
     // reaches its reducer once per map partition, not once per copy
-    val p = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val p = FallbackAudit.finalPlan(q).toString
     p should include("WindowGroupLimit")
   }
 
@@ -4358,13 +4295,9 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // the ONE shingle kernel in the plan is the new batch's. Like every
     // other kernel-count pin, execute FIRST so AQE finalizes exchange
     // reuse (the static plan duplicates the shared repartition(id) stage).
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val q = Dedup.nearDupPairsAgainstIndex(newBatch, "doc_id", "text", dir)
     q.collect()
-    val plan = q.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case o => o.toString
-    }
+    val plan = FallbackAudit.finalPlan(q).toString
     "shingle_hashes".r.findAllIn(plan).size shouldBe 1
     // append survivors, then an exact copy of an appended doc must hit
     Dedup.appendToBandIndex(

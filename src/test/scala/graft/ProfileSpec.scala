@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.operators.Profile
+import graft.tools.FallbackAudit
 
 /** One-pass profiler (operators/Profile.scala): stat correctness against
   * directly-computed values, null/all-null edges, and the ONE-SCAN plan
@@ -75,10 +76,7 @@ class ProfileSpec extends AnyFunSuite with Matchers {
       p.subqueries.foreach(walk)
       p.children.foreach(walk)
     }
-    walk(out.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+    walk(FallbackAudit.finalPlan(out))
     scans should have size 1
     // and the scan reads ONLY the profiled columns
     scans.head.schema.fieldNames.toSet shouldBe

@@ -629,6 +629,29 @@ class SelectionSpec extends AnyFunSuite with Matchers {
     expected.foreach { case (id, (_, s)) => gotH(id) shouldBe s +- 1e-9 }
   }
 
+  test("NB model overwritten at the same path: scoring follows the new " +
+    "model, not a cached sidecar row") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-nbmodel-over").toString + "/model"
+    def save(numBuckets: Int): Unit =
+      Selection.saveNbModel(nbCorpus.filter(F.col("id") < 160),
+        "id", "text", "lab", dir, numBuckets = numBuckets)
+    def score(): Map[Long, Double] =
+      Selection.scoreWithNbModel(spark, dir,
+          nbCorpus.filter(F.col("id") >= 160), "id", "text")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    save(numBuckets = 0)
+    val exact = nbScores(numBuckets = 0)
+    score().foreach { case (id, s) => s shouldBe exact(id)._2 +- 1e-9 }
+    // 16 buckets: colliding features, so the scores really change
+    save(numBuckets = 16)
+    val narrow = nbScores(numBuckets = 16)
+    narrow.exists { case (id, (_, s)) => math.abs(s - exact(id)._2) > 1e-6 } shouldBe true
+    val got = score()
+    got.keySet shouldBe narrow.keySet
+    narrow.foreach { case (id, (_, s)) => got(id) shouldBe s +- 1e-9 }
+  }
+
   test("streaming NB scoring == batch scoring (end-to-end readStream)") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-nbstream").toString
