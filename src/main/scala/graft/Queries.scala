@@ -1467,10 +1467,10 @@ object Queries {
 
   private def q_nb_quality_buckets(s: SparkSession, d: String,
       numBuckets: Int, hashFn: String = "xxhash64"): DataFrame = {
-    // single-scan same-corpus form (r19): tokenizes documents ONCE with
-    // the split/label flags carried; identical scores to the two-frame
-    // form (nbClassifierScoreWithin scaladoc has the equivalence
-    // argument, and SelectionSpec pins it row-for-row)
+    // same-corpus form: the disjoint split filters run below the
+    // tokenizer kernel, so every document is tokenized once (the
+    // nbClassifierScoreWithin scaladoc has the argument; SelectionSpec
+    // pins the scores against a per-document tf reference)
     val split = Selection.hashSplit(Tables.documents(s, d), "doc_id",
       Seq("train" -> 0.8, "score" -> 0.2))
     Selection.nbClassifierScoreWithin(split, "doc_id", "text",

@@ -65,7 +65,7 @@ object Tok {
   def restampArtifact(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import org.apache.spark.sql.{functions => F}
-    val params = spark.read.parquet(s"$path/_params")
+    val params = graft.operators.StoreLayout.readSidecar(spark, path, "_params")
     if (params.columns.contains("hashFamily")) {
       val got = params.head().getAs[String]("hashFamily")
       if (got == HashFamily) return // already current

@@ -230,11 +230,11 @@ object Selection {
   }
 
   /** Pre-aggregation face of [[docFeatures]]: one row per feature
-    * OCCURRENCE (no per-doc tf collapse) — the stateless shape a
-    * STREAMING consumer needs, where a `groupBy` here would be a second
-    * stateful aggregation (sums over occurrences equal sums over
-    * (feat, tf) pairs by associativity, so consumers are free to
-    * re-aggregate at whatever key the sink requires).
+    * OCCURRENCE (no per-doc tf collapse). Every NB path reads this shape:
+    * sums over occurrences equal sums over (feat, tf) pairs by
+    * associativity, so consumers re-aggregate at whatever key they need
+    * without a doc-keyed exchange, and a STREAMING consumer stays
+    * stateless (a `groupBy` here would be a second stateful aggregation).
     */
   private[graft] def docFeatureRows(df: DataFrame, idCol: String,
       textCol: String, numBuckets: Int,
@@ -445,7 +445,7 @@ object Selection {
     * examples and use to score candidate documents (Brown et al. 2020
     * appendix A; Wenzek et al. 2020 §4.4; Joulin et al. 2017). Fit on
     * `labeled` (boolean `labelCol`; true = positive / high-quality class)
-    * over the DSIR feature space ([[docFeatures]]: unigrams + bigrams —
+    * over the DSIR feature space ([[docFeatureRows]]: unigrams + bigrams —
     * exact strings at `numBuckets = 0`, the oracle-expressible variant;
     * hashed into `numBuckets` buckets otherwise, the fixed-model-size
     * 100 TB shape), then score `toScore`:
@@ -461,16 +461,23 @@ object Selection {
     * positive-class-like. Returns (idCol, nb_score); scored docs with no
     * tokens drop (consistent with [[dsirLogWeights]]).
     *
-    * SCALE: the labeled corpus' TEXT is scanned and tokenized once — class
-    * counts come from ONE conditional aggregate over the shared feature
-    * stage, not a per-class scan or a cross-corpus outer join (labels live
-    * in the same frame, unlike DSIR's two corpora). The doc-count prior is
-    * a second scan of `labeled` pruned to the label column only (text
-    * untouched — at 100 TB the text scan dominates; this one reads a
-    * boolean column). The model (feat → llr) is never collected or
-    * broadcast: V/totals travel as 1-row broadcasts and the score-side
-    * feature join shuffles on the feature key (AQE-skew-splittable). With
-    * `numBuckets > 0` model state is capped at `numBuckets` rows.
+    * SCALE: every NB path works on per-OCCURRENCE feature rows, never a
+    * per-(doc, feature) tf table: `n_d(f)` multiplies a per-feature
+    * constant, so summing llr once per occurrence is the same sum, and
+    * class counts are occurrence counts per feature. No exchange is keyed
+    * on the doc id below the final per-doc score aggregate: the class
+    * counts' partial aggregate collapses each map task's occurrences to
+    * one row per feature before the feature-keyed exchange, and the
+    * scoring side ships occurrence rows to the feature join only. Each
+    * input frame is scanned and tokenized once (the same-corpus
+    * [[nbClassifierScoreWithin]] scans its one frame once per branch);
+    * the doc-count prior is a further scan of `labeled` pruned to the
+    * label column (text untouched — at 100 TB the text scan dominates;
+    * this one reads a boolean). The
+    * model (feat → llr) is never collected or broadcast: V/totals travel
+    * as 1-row broadcasts and the feature join shuffles on the feature key
+    * (AQE-skew-splittable). With `numBuckets > 0` model state is capped
+    * at `numBuckets` rows.
     */
   def nbClassifierScore(labeled: DataFrame, toScore: DataFrame,
       idCol: String, textCol: String, labelCol: String,
@@ -478,75 +485,39 @@ object Selection {
       hashFn: String = "xxhash64"): DataFrame = {
     val (llr, params) = nbFit(labeled, idCol, textCol, labelCol,
       numBuckets, smoothing, hashFn)
-    nbScoreJoin(docFeatures(toScore, idCol, textCol, numBuckets,
+    nbScoreJoin(docFeatureRows(toScore, idCol, textCol, numBuckets,
       hashFn = hashFn), llr, params, idCol)
   }
 
   /** [[nbClassifierScore]] for the ubiquitous SAME-CORPUS case — train and
     * score populations are predicates over ONE frame (the [[hashSplit]]
-    * shape) rather than two frames. The two-frame form scans and tokenizes
-    * the corpus twice (once per split); here the corpus is scanned and
-    * tokenized ONCE with the split/label flags carried through the shared
-    * per-(doc, feature) tf stage, and BOTH consumers — the per-class count
-    * aggregate and the scoring join — filter ABOVE that aggregate (guide
-    * §2.3/§2.4: the kernel pass, the heaviest stage at scale, halves and
-    * the tf exchange is computed once and reused).
+    * shape) rather than two frames. It IS the two-frame form over
+    * `df.filter(trainCond)` (labelled by `labelCond`) and
+    * `df.filter(scoreCond)`: one code path, so the two cannot drift.
     *
-    * Equivalence to `nbClassifierScore(df.filter(trainCond).withColumn(l,
-    * labelCond), df.filter(scoreCond), …)` is exact, not approximate: the
-    * split/label flags are per-document constants, so grouping by
-    * (id, flags, feat) yields the same (id, feat, n) rows as grouping by
-    * (id, feat) after filtering, and filter∘aggregate = aggregate∘filter
-    * when the filter tests a group key. The model side (counts → stats →
-    * prior → llr) and the scoring tail are the SAME code as the two-frame
-    * form — no formula is restated. Pinned row-for-row in SelectionSpec.
-    *
-    * Plan-shape fine print (the bigramLogLoss/bm25 discipline): each
-    * branch's filter references the tf count (`n >= 1`, vacuously true)
-    * so predicate pushdown cannot split the shared aggregate into
-    * per-split copies, and each branch references every output column of
-    * the shared stage inside no-op-by-construction guards so column
-    * pruning keeps the two copies canonically identical (one exchange,
-    * reused — plan-pinned in PipelineSpec).
+    * Each split filter is a plain predicate on the input rows, so it sits
+    * below the `shingle_hashes_all` / `gram_strings` kernel (and in the
+    * scan, where the reader can evaluate it): each branch tokenizes only
+    * its own docs, and a disjoint split (the [[hashSplit]] shape)
+    * tokenizes every doc once. The price is one scan of the frame per
+    * branch: a predicate the Parquet reader cannot evaluate (the md5 of
+    * the id in [[hashSplit]]) filters after the read, so each branch
+    * reads the whole text column, twice the text bytes a shared tf stage
+    * read. That stage's per-(doc, feature) exchange shipped more bytes
+    * per word than the second read decodes (3-4x less task CPU for the
+    * q_nb_quality* queries at sf0.1, 4 cores). A doc that matches BOTH
+    * `trainCond` and `scoreCond` is tokenized twice, once per branch. A
+    * null condition counts as false.
+    * The doc-count prior scans the label and split columns only. Pinned
+    * against a per-(doc, feature) tf reference in SelectionSpec.
     */
   def nbClassifierScoreWithin(df: DataFrame, idCol: String, textCol: String,
       trainCond: Column, labelCond: Column, scoreCond: Column,
       numBuckets: Int = 1 << 16, smoothing: Double = 1.0,
-      hashFn: String = "xxhash64"): DataFrame = {
-    require(smoothing > 0, s"smoothing must be positive, got $smoothing")
-    val s = F.lit(smoothing)
-    val flagged = df
-      .withColumn("__tr", F.coalesce(trainCond, F.lit(false)))
-      .withColumn("__lab", labelCond)
-      .withColumn("__sc", F.coalesce(scoreCond, F.lit(false)))
-    val feats = docFeatures(flagged, idCol, textCol, numBuckets,
-      carry = Seq("__tr", "__lab", "__sc"), hashFn = hashFn)
-    // ONE non-decomposable predicate per branch: `flag === (n >= 1)`
-    // equals the bare flag (n is a count, so n >= 1 is vacuously true)
-    // but references the aggregate output `n`, so PushDownPredicates can
-    // neither push it below the shared tf aggregate nor split a
-    // conjunction and push the flag half into the scan (a conjunctive
-    // `flag && n >= 1` IS split, specializing each branch's scan filter
-    // and breaking the shared exchange — measured, r19). The split/label
-    // flags need no pruning guards: they are GROUP KEYS of the shared
-    // aggregate, so every branch's partial aggregate (the exchange
-    // subtree) carries them whether or not the branch reads them.
-    def splitFilter(flag: String): Column =
-      F.col(flag) === (F.col("n") >= 1)
-    val trainFeats = feats.filter(splitFilter("__tr"))
-    // same aggregate as nbFit's counts: null-id training docs count like
-    // any other, as they do in the two-frame form
-    val counts = trainFeats.groupBy("feat").agg(
-      F.sum(F.when(F.col("__lab"), F.col("n")).otherwise(0L)).as("cpos"),
-      F.sum(F.when(!F.col("__lab"), F.col("n")).otherwise(0L)).as("cneg"))
-    val prior = df.filter(trainCond).agg(
-      F.sum(F.when(labelCond, 1L).otherwise(0L)).cast("double").as("__np"),
-      F.sum(F.when(!labelCond, 1L).otherwise(0L)).cast("double").as("__nn"))
-    val (llr, params) = nbModelFromCounts(counts, prior, numBuckets, s)
-    val sfeats = feats.filter(splitFilter("__sc"))
-      .select(F.col(idCol), F.col("feat"), F.col("n"))
-    nbScoreJoin(sfeats, llr, params, idCol)
-  }
+      hashFn: String = "xxhash64"): DataFrame =
+    nbClassifierScore(df.filter(trainCond).withColumn("__lab", labelCond),
+      df.filter(scoreCond), idCol, textCol, "__lab", numBuckets, smoothing,
+      hashFn)
 
   /** Lazy model fit shared by [[nbClassifierScore]] and [[saveNbModel]]:
     * returns (llr: (feat, __llr), params: ONE row with totals __tp/__tn,
@@ -559,25 +530,23 @@ object Selection {
       smoothing: Double, hashFn: String = "xxhash64"): (DataFrame, DataFrame) = {
     require(smoothing > 0, s"smoothing must be positive, got $smoothing")
     val s = F.lit(smoothing)
-    // per-feature class counts: one aggregate over one tokenizer pass
-    val counts = docFeatures(labeled, idCol, textCol, numBuckets,
+    val lab = F.col(labelCol)
+    // per-feature class counts: occurrences per feature, one aggregate
+    // over one tokenizer pass (null-id docs count like any other)
+    val counts = docFeatureRows(labeled, idCol, textCol, numBuckets,
         carry = Seq(labelCol), hashFn = hashFn)
       .groupBy("feat").agg(
-        F.sum(F.when(F.col(labelCol), F.col("n")).otherwise(0L)).as("cpos"),
-        F.sum(F.when(!F.col(labelCol), F.col("n")).otherwise(0L)).as("cneg"))
+        F.sum(F.when(lab, 1L).otherwise(0L)).as("cpos"),
+        F.sum(F.when(!lab, 1L).otherwise(0L)).as("cneg"))
     // label-only scan: prunes to one boolean column, no tokenization
     val prior = labeled.agg(
-      F.sum(F.when(F.col(labelCol), 1L).otherwise(0L)).cast("double")
-        .as("__np"),
-      F.sum(F.when(!F.col(labelCol), 1L).otherwise(0L)).cast("double")
-        .as("__nn"))
+      F.sum(F.when(lab, 1L).otherwise(0L)).cast("double").as("__np"),
+      F.sum(F.when(!lab, 1L).otherwise(0L)).cast("double").as("__nn"))
     nbModelFromCounts(counts, prior, numBuckets, s)
   }
 
-  /** Shared model tail of [[nbFit]] and [[nbClassifierScoreWithin]]: from
-    * the per-feature class counts and the 1-row doc-count prior, derive
-    * (llr, params) — ONE definition so the two-frame and same-corpus fits
-    * cannot drift.
+  /** Model tail of [[nbFit]]: from the per-feature class counts and the
+    * 1-row doc-count prior, derive (llr, params).
     */
   private def nbModelFromCounts(counts: DataFrame, prior: DataFrame,
       numBuckets: Int, s: Column): (DataFrame, DataFrame) = {
@@ -618,29 +587,34 @@ object Selection {
     (llr, params)
   }
 
-  /** Shared scoring tail: left-join doc features to the model, fall back
-    * to the unseen ratio, re-aggregate per doc with the prior folded into
-    * the SAME aggregate (`first` of a params-constant — a second params
-    * consumer after the groupBy cannot be column-pruned past the
-    * cross-join cardinality, so Catalyst keeps a degenerate copy of the
-    * whole stats subtree including an extra corpus scan; plan-pinned).
-    * `params` is one row and rides as ONE reused broadcast — never a
-    * shuffle key.
-    */
-  private def nbScoreJoin(sfeats: DataFrame, llr: DataFrame,
-      params: DataFrame, idCol: String): DataFrame = {
+  /** llr of a feature unseen in training, read from the params row. */
+  private def nbUnseen: Column = {
     val s = F.col("__s")
-    val unseen =
-      F.log(F.col("__tn") + s * F.col("__v")) -
-        F.log(F.col("__tp") + s * F.col("__v"))
-    sfeats
+    F.log(F.col("__tn") + s * F.col("__v")) -
+      F.log(F.col("__tp") + s * F.col("__v"))
+  }
+
+  /** The doc-count prior ln((npos+s)/(nneg+s)), read from the params row. */
+  private def nbPrior: Column =
+    F.log((F.col("__np") + F.col("__s")) / (F.col("__nn") + F.col("__s")))
+
+  /** Shared scoring tail over per-occurrence feature rows
+    * ([[docFeatureRows]]): left-join them to the model, fall back to the
+    * unseen ratio, sum per doc with the prior folded into the SAME
+    * aggregate (`first` of a params-constant — a second params consumer
+    * after the groupBy cannot be column-pruned past the cross-join
+    * cardinality, so Catalyst keeps a degenerate copy of the whole stats
+    * subtree including an extra corpus scan; plan-pinned). `params` is one
+    * row and rides as ONE reused broadcast — never a shuffle key.
+    */
+  private def nbScoreJoin(featRows: DataFrame, llr: DataFrame,
+      params: DataFrame, idCol: String): DataFrame =
+    featRows
       .join(llr, Seq("feat"), "left_outer")
       .crossJoin(F.broadcast(params))
       .groupBy(idCol)
-      .agg((F.sum(F.col("n") * F.coalesce(F.col("__llr"), unseen)) +
-        F.first(F.log((F.col("__np") + s) / (F.col("__nn") + s))))
+      .agg((F.sum(F.coalesce(F.col("__llr"), nbUnseen)) + F.first(nbPrior))
         .as("nb_score"))
-  }
 
   /** Persist a fitted NB model — the fit-once/score-many serving shape
     * (same contract as the IVF index family: training cost is paid at
@@ -671,9 +645,9 @@ object Selection {
     val row = StoreLayout.readParams(spark, path)
     graft.functions.Tok.checkHashFamily(row, path)
     val numBuckets = row.getAs[Int]("__numBuckets")
-    nbScoreJoin(docFeatures(toScore, idCol, textCol, numBuckets),
-      spark.read.parquet(s"$path/llr"), spark.read.parquet(s"$path/_params"),
-      idCol)
+    nbScoreJoin(docFeatureRows(toScore, idCol, textCol, numBuckets),
+      spark.read.parquet(s"$path/llr"),
+      StoreLayout.readSidecar(spark, path, "_params"), idCol)
   }
 
   /** Streaming face of [[scoreWithNbModel]]: per-occurrence feature rows
@@ -692,19 +666,14 @@ object Selection {
     val paramsRow = StoreLayout.readParams(spark, path)
     graft.functions.Tok.checkHashFamily(paramsRow, path)
     val numBuckets = paramsRow.getAs[Int]("__numBuckets")
-    val params = spark.read.parquet(s"$path/_params")
-    val s = F.col("__s")
-    val unseen =
-      F.log(F.col("__tn") + s * F.col("__v")) -
-        F.log(F.col("__tp") + s * F.col("__v"))
-    val prior = F.log((F.col("__np") + s) / (F.col("__nn") + s))
+    val params = StoreLayout.readSidecar(spark, path, "_params")
     docFeatureRows(stream, idCol, textCol, numBuckets, carry = Seq(tsCol))
       .join(spark.read.parquet(s"$path/llr"), Seq("feat"), "left_outer")
       .withColumn("__pk", F.lit(1))
       .join(F.broadcast(params.withColumn("__pk", F.lit(1))), "__pk")
       .withWatermark(tsCol, lateness)
       .groupBy(F.window(F.col(tsCol), width), F.col(idCol))
-      .agg((F.sum(F.coalesce(F.col("__llr"), unseen)) + F.first(prior))
+      .agg((F.sum(F.coalesce(F.col("__llr"), nbUnseen)) + F.first(nbPrior))
         .as("nb_score"))
       .select(F.col("window"), F.col(idCol), F.col("nb_score"))
   }

@@ -529,6 +529,10 @@ object Similarity {
     probeJoin(q, c, k, excludeSelf)
   }
 
+  /** [[trainCentroids]]' Lloyd refinement sample: this many vectors, or
+    * `nCentroids` when that is larger. */
+  val CentroidSampleCap = 10000
+
   /** Deterministic sampled (+ optionally Lloyd-refined) centroid set — the
     * coarse quantizer shared by [[ivfTopK]] and [[buildIvfIndex]]. Seeds
     * come from [[hashSample]] (hash-ordered top-k), so even with the
@@ -546,7 +550,11 @@ object Similarity {
     // screen), so a second top-k job bought nothing. When refining, the
     // Lloyd subset additionally drops rows of non-modal length — the same
     // dim screen kmeansRefine applies.
-    val capAll = math.max(if (refineIters > 0) 10000 else 0, nCentroids)
+    // the k centroids come back to the driver (and ride into the kernel)
+    // whatever the sample size, so only the Lloyd sample is capped
+    // (SCALING.md, driver memory envelope)
+    val capAll =
+      math.max(if (refineIters > 0) CentroidSampleCap else 0, nCentroids)
     val rawAll = hashSample(candidates, idCol, vecCol, capAll, sampleSeed)
       .collect().map(_.getSeq[Double](0).toArray)
     val raw = rawAll.take(nCentroids)
@@ -1266,7 +1274,7 @@ object Similarity {
     StoreLayout.cachedSide(spark, path, "centroids",
         Seq("_meta", "_centroids")) {
       val assign =
-        try spark.read.parquet(s"$path/_meta").head().getString(0)
+        try StoreLayout.readSidecar(spark, path, "_meta").head().getString(0)
         catch {
           case e: org.apache.spark.sql.AnalysisException
               if e.getMessage.contains("PATH_NOT_FOUND") ||
@@ -1276,7 +1284,7 @@ object Similarity {
       require(assign == AssignMetric,
         s"$path was built under assignment metric '$assign', this version " +
           s"probes '$AssignMetric' — rebuild the index/centroids before use")
-      spark.read.parquet(s"$path/_centroids").collect()
+      StoreLayout.readSidecar(spark, path, "_centroids").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
     }
@@ -1287,7 +1295,7 @@ object Similarity {
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Array[Double]]] =
     StoreLayout.cachedSide(spark, path, "codebooks", Seq("_codebooks")) {
-      val rows = spark.read.parquet(s"$path/_codebooks").collect()
+      val rows = StoreLayout.readSidecar(spark, path, "_codebooks").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
         .toMap
       val m = rows.keys.map(_._1).max + 1

@@ -141,8 +141,29 @@ private[graft] object StoreLayout {
     */
   def readParams(spark: SparkSession, path: String): org.apache.spark.sql.Row =
     cachedSide(spark, path, "params", Seq("_params")) {
-      spark.read.parquet(s"$path/_params").head()
+      readSidecar(spark, path, "_params").head()
     }
+
+  /** The side table `name` (`_params`, `_meta`, `_centroids`, ...) of the
+    * store at `path`, read from its listed data files. A directory read
+    * of an underscore-named path gives the same rows but makes Spark log
+    * `WARN DataSource: All paths were ignored` on every call. A missing
+    * side table throws the PATH_NOT_FOUND AnalysisException a directory
+    * read gives (the store loaders catch that type), and one with no
+    * data files the UNABLE_TO_INFER_SCHEMA one.
+    */
+  def readSidecar(spark: SparkSession, path: String, name: String): DataFrame = {
+    val (fs, p) = fsFor(spark, path)
+    val dir = new Path(p, name)
+    val files =
+      try rawDataFiles(fs, dir)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new org.apache.spark.sql.AnalysisException("PATH_NOT_FOUND",
+            Map("path" -> dir.toString), Some(e))
+      }
+    readFiles(spark, fs, dir, files)
+  }
 
   /** Read exactly `files` (names relative to `dir`), with `basePath` for a
     * hive-partitioned layout so its partition columns are discovered.

@@ -110,4 +110,66 @@ class LayoutSpec extends AnyFunSuite with Matchers {
     an[Exception] should be thrownBy
       JsonlSource.readJsonlStrict(spark, f.toString, schema).collect()
   }
+
+  /** Messages Spark's `DataSource` logger emits at WARN while `body` runs
+    * (the suite's session logs at ERROR, so the logger is raised to WARN
+    * for the capture only).
+    */
+  private def dataSourceWarns(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.sql.execution.datasources.DataSource"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-warn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val prior = Option(cfg.getLoggers.get(name))
+    val lc = new LoggerConfig(name, Level.WARN, false)
+    lc.addAppender(app, Level.WARN, null)
+    cfg.addLogger(name, lc)
+    ctx.updateLoggers()
+    try body
+    finally {
+      cfg.removeLogger(name)
+      prior.foreach(cfg.addLogger(name, _))
+      ctx.updateLoggers()
+      app.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("sidecar reads log no 'All paths were ignored' WARN (NB model " +
+    "save + score, IVF-PQ build + probe)") {
+    import graft.operators.{Selection, Similarity}
+    val docs = Tables.documents(spark, sf).limit(200)
+      .withColumn("lab", F.col("lang") === "en")
+    val emb = Tables.embeddings(spark, sf)
+    val nb = java.nio.file.Files.createTempDirectory("graft-warn-nb")
+      .toString + "/model"
+    val ivf = java.nio.file.Files.createTempDirectory("graft-warn-ivf")
+      .toString + "/index"
+    def ignored(ws: Seq[String]) = ws.filter(_.contains("All paths were ignored"))
+    val warns = dataSourceWarns {
+      Selection.saveNbModel(docs, "doc_id", "text", "lab", nb,
+        numBuckets = 4096)
+      Selection.scoreWithNbModel(spark, nb, docs, "doc_id", "text").collect()
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", ivf, dim = 64,
+        nCentroids = 4, m = 8, ksub = 16)
+      Similarity.probeIvfPqIndex(spark, ivf, emb.limit(5), "vec_id",
+        "embedding", k = 3, nProbe = 2, shortlist = 10).collect()
+    }
+    ignored(warns) shouldBe empty
+    // the capture sees the WARN a directory read of a sidecar gives
+    ignored(dataSourceWarns {
+      spark.read.parquet(s"$nb/_params").collect()
+    }) should not be empty
+  }
 }

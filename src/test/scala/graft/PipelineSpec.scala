@@ -296,30 +296,77 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     "gram_strings".r.findAllIn(nePlan).size shouldBe 4
     tok.r.findAllIn(nePlan).size shouldBe 0
     nePlan should not include "CartesianProduct"
-    // NB classifier, same-corpus Within form (r19): the corpus is scanned
-    // and tokenized ONCE (one kernel site = 2 gram calls: 1-gram +
-    // 2-gram), the shared tf exchange feeds BOTH the per-class count
-    // aggregate and the scoring join via ReusedExchange, and the llr
-    // prior-reference guard keeps the params broadcast canonical (no
-    // degenerate second label scan): exactly TWO FileScans total — the
-    // tokenize scan and the 1-row prior's label-only scan
-    def nbWithinPlan(buckets: Int) = finalPlan(
-      Selection.nbClassifierScoreWithin(docs, "doc_id", "text",
-        trainCond = F.col("lang") =!= "fr",
-        labelCond = F.col("lang") === "en",
-        scoreCond = F.col("lang") === "fr", numBuckets = buckets))
-    val nwPlan = nbWithinPlan(4096)
-    "shingle_hashes_all".r.findAllIn(nwPlan).size shouldBe 2
-    "FileScan parquet".r.findAllIn(nwPlan).size shouldBe 2
-    "ReusedExchange".r.findAllIn(nwPlan).size should be >= 2
-    tok.r.findAllIn(nwPlan).size shouldBe 0
-    nwPlan should not include "CartesianProduct"
-    val nwePlan = nbWithinPlan(0)
-    "gram_strings".r.findAllIn(nwePlan).size shouldBe 2
-    "FileScan parquet".r.findAllIn(nwePlan).size shouldBe 2
-    "ReusedExchange".r.findAllIn(nwePlan).size should be >= 2
-    tok.r.findAllIn(nwePlan).size shouldBe 0
-    nwePlan should not include "CartesianProduct"
+    // NB classifier, same-corpus Within form: the split filters are plain
+    // predicates below the kernel, so on this disjoint split each kernel
+    // site (1-gram + 2-gram call) tokenizes only its own branch's docs —
+    // every doc once. Pinned on the final plan's nodes and SQL metrics:
+    //  - no exchange keyed on the doc id below the final per-doc score
+    //    aggregate (no per-document tf stage);
+    //  - each kernel site reads exactly |train| or |score| filtered rows;
+    //  - the class-counts exchange is reused by the 1-row stats consumer;
+    //  - three FileScans: two tokenize scans and the label-only prior scan.
+    locally {
+      import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.QueryStageExec
+      import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+      import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      def expand(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case q: QueryStageExec => expand(q.plan)
+        case _ => p.children.flatMap(expand)
+      })
+      // a shuffle (or a reuse of one) hash-partitioned on `col`
+      def keyedOn(p: SparkPlan, col: String): Boolean = p match {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.flatMap(_.references).exists(_.name == col)
+          case _ => false
+        }
+        case r: ReusedExchangeExec => keyedOn(r.child, col)
+        case _ => false
+      }
+      val trainCond = F.col("lang") =!= "fr"
+      val scoreCond = F.col("lang") === "fr"
+      val branchRows = Seq(docs.filter(trainCond).count(),
+        docs.filter(scoreCond).count()).sorted
+      branchRows.foreach(_ should be > 0L)
+      for ((buckets, kernel) <- Seq(4096 -> "shingle_hashes_all",
+          0 -> "gram_strings")) withClue(s"numBuckets=$buckets: ") {
+        val q = Selection.nbClassifierScoreWithin(docs, "doc_id", "text",
+          trainCond = trainCond, labelCond = F.col("lang") === "en",
+          scoreCond = scoreCond, numBuckets = buckets)
+        q.collect()
+        val plan = FallbackAudit.finalPlan(q)
+        val text = plan.toString
+        val nodes = expand(plan)
+        kernel.r.findAllIn(text).size shouldBe 4
+        "FileScan parquet".r.findAllIn(text).size shouldBe 3
+        tok.r.findAllIn(text).size shouldBe 0
+        text should not include "CartesianProduct"
+        // the only doc-keyed exchange is the final score aggregate's own
+        val scoreAgg = nodes.collectFirst {
+          case a: HashAggregateExec if a.output.exists(_.name == "nb_score") => a
+        }.get
+        val docKeyed = nodes.filter(keyedOn(_, "doc_id"))
+        docKeyed.size shouldBe 1
+        expand(scoreAgg).filter(keyedOn(_, "doc_id")) shouldBe docKeyed
+        // each kernel site's input is its branch's split filter
+        val siteRows = nodes.collect {
+          case p: ProjectExec if p.projectList.exists(_.toString.contains(kernel)) =>
+            expand(p).collectFirst { case f: FilterExec => f }.get
+              .metrics("numOutputRows").value
+        }
+        siteRows.sorted shouldBe branchRows
+        // the class-counts exchange feeds the stats aggregate as a reuse
+        val statsAgg = nodes.collectFirst {
+          case a: HashAggregateExec if a.output.exists(_.name == "__tp") => a
+        }.get
+        expand(statsAgg).exists {
+          case r: ReusedExchangeExec => keyedOn(r.child, "feat")
+          case _ => false
+        } shouldBe true
+      }
+    }
     // duplicated passages (hashed): one scan, ONE fused native kernel call
     // (tokenize+hash inside shingle_hashes_all; no Spark-side tokenizer)
     val pPlan = finalPlan(TextAnalysis.duplicatedPassages(
@@ -1489,6 +1536,24 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // time), not a post-scan Filter
     val scan = probe.queryExecution.executedPlan.toString
     scan should include regex """PartitionFilters: \[[^\]]*__list"""
+  }
+
+  test("centroid training above the Lloyd sample cap: k centroids train " +
+    "and serve (saveSemDedupCentroids, semDedup, semDedupAuto)") {
+    // k = n distinct points: every point seeds its own centroid, Lloyd
+    // keeps it there, every cluster is a singleton and nothing dedups
+    val n = Similarity.CentroidSampleCap + 1
+    val pts = spark.range(n).select(F.col("id").as("vec_id"),
+      F.array(F.col("id").cast("double") + 1.0, F.lit(1.0)).as("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-cap").toString
+    Similarity.saveSemDedupCentroids(pts, "vec_id", "embedding", dir,
+      nClusters = n)
+    spark.read.parquet(s"$dir/_centroids").count() shouldBe n
+    Similarity.semDedup(pts, "vec_id", "embedding", nClusters = n)
+      .count() shouldBe n
+    // semDedupAuto's derived count: ceil(n / 1) = n clusters
+    Similarity.semDedupAuto(pts, "vec_id", "embedding",
+      maxRowsPerCluster = 1).count() shouldBe n
   }
 
   test("persisted IVF-PQ index: exhaustive probe == pqTopKRerank; pruned plans") {

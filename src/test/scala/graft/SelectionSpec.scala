@@ -507,6 +507,105 @@ class SelectionSpec extends AnyFunSuite with Matchers {
       }
   }
 
+  /** nbCorpus plus hostile rows: null ids (in both splits), ids that
+    * repeat a training and a scored doc, empty and whitespace-only text,
+    * and null labels.
+    */
+  private lazy val hostileNb = {
+    import spark.implicits._
+    nbCorpus.select(F.col("id").cast("long"), F.col("text"),
+        F.col("lab").cast("boolean"))
+      .unionByName(Seq(
+        (Option.empty[Long], "alpha zulu data", Some(true)),
+        (Option.empty[Long], "xray table xray", Some(false)),
+        (Some(5L), "omega zulu omega", Some(false)),
+        (Some(170L), "alpha alpha bravo", Some(true)),
+        (Some(300L), "", Some(true)),
+        (Some(301L), " \t  ", Option.empty[Boolean]),
+        (Some(302L), "alpha beta row", Option.empty[Boolean]))
+        .toDF("id", "text", "lab"))
+  }
+
+  /** The NB score as the per-document tf formulation computes it: a
+    * per-(doc, feature) tf aggregate on each side, class counts as
+    * sum(tf) per feature, and score(d) = prior + sum_f tf_d(f) * llr(f),
+    * evaluated on the driver from the collected tf rows. Keys are the
+    * scored ids (None for the null-id group).
+    */
+  private def nbTfReference(train: org.apache.spark.sql.DataFrame,
+      score: org.apache.spark.sql.DataFrame, numBuckets: Int,
+      hashFn: String): Map[Option[Long], Double] = {
+    def tf(df: org.apache.spark.sql.DataFrame, carry: Seq[String]) =
+      Selection.docFeatureRows(df, "id", "text", numBuckets, carry, hashFn)
+        .groupBy(("id" +: carry :+ "feat").map(F.col): _*)
+        .agg(F.count(F.lit(1)).as("n"))
+    val counts = tf(train, Seq("lab")).collect().toSeq
+      .groupBy(_.get(2))
+      .map { case (feat, rows) =>
+        def sumIf(lab: Boolean) = rows.filter(r => !r.isNullAt(1) &&
+          r.getBoolean(1) == lab).map(_.getLong(3)).sum.toDouble
+        feat -> (sumIf(true), sumIf(false))
+      }
+    val s = 1.0
+    val tp = counts.values.map(_._1).sum
+    val tn = counts.values.map(_._2).sum
+    val v = counts.size.toDouble
+    val labels = train.select("lab").collect().toSeq
+    val np = labels.count(r => !r.isNullAt(0) && r.getBoolean(0)).toDouble
+    val nn = labels.count(r => !r.isNullAt(0) && !r.getBoolean(0)).toDouble
+    val llr = counts.map { case (f, (cp, cn)) =>
+      f -> (math.log((cp + s) / (tp + s * v)) - math.log((cn + s) / (tn + s * v)))
+    }
+    val unseen = math.log(tn + s * v) - math.log(tp + s * v)
+    val prior = math.log((np + s) / (nn + s))
+    tf(score, Nil).collect().toSeq
+      .groupBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      .map { case (id, rows) =>
+        id -> (prior + rows.map(r => r.getLong(2) * llr.getOrElse(r.get(1), unseen)).sum)
+      }
+  }
+
+  test("every NB path == the per-document tf reference (xxhash64, md5, " +
+    "exact; null and duplicate ids, empty text, overlapping splits)") {
+    val trainCond = F.col("id").isNull || F.col("id") < 160 || F.col("id") >= 300
+    val scoreCond = F.col("id").isNull || F.col("id") >= 150
+    val train = hostileNb.filter(trainCond)
+    val score = hostileNb.filter(scoreCond)
+    def keyed(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Double] =
+      df.collect().map(r =>
+        (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getDouble(1)).toMap
+    def close(got: Double, ref: Double): Boolean =
+      math.abs(got - ref) <= 1e-9 * math.max(1.0, math.max(math.abs(got), math.abs(ref)))
+    def same(got: Map[Option[Long], Double], ref: Map[Option[Long], Double]) = {
+      got.keySet shouldBe ref.keySet
+      ref.foreach { case (id, r) =>
+        withClue(s"id $id: got ${got(id)}, reference $r: ") {
+          close(got(id), r) shouldBe true
+        }
+      }
+    }
+    for ((buckets, hashFn) <- Seq(0 -> "xxhash64", 4096 -> "xxhash64",
+        4096 -> "md5")) withClue(s"numBuckets=$buckets $hashFn: ") {
+      val ref = nbTfReference(train, score, buckets, hashFn)
+      // scored docs: ids 150.. and the null-id group; 300 and 301 have no
+      // tokens and drop
+      ref.keySet shouldBe ((150L to 199L) ++ Seq(302L)).map(Option(_)).toSet + None
+      same(keyed(Selection.nbClassifierScoreWithin(hostileNb, "id", "text",
+        trainCond, F.col("lab"), scoreCond, numBuckets = buckets,
+        hashFn = hashFn)), ref)
+      same(keyed(Selection.nbClassifierScore(train, score, "id", "text",
+        "lab", numBuckets = buckets, hashFn = hashFn)), ref)
+      if (hashFn == "xxhash64") { // saveNbModel fits the xxhash64 flavor
+        val dir = java.nio.file.Files
+          .createTempDirectory("graft-nbref").toString + "/model"
+        Selection.saveNbModel(train, "id", "text", "lab", dir,
+          numBuckets = buckets)
+        same(keyed(Selection.scoreWithNbModel(spark, dir, score, "id",
+          "text")), ref)
+      }
+    }
+  }
+
   test("NB hashed model reproduces exact scores at collision-free width") {
     // ~120 distinct features into 2^20 buckets: no collisions (verified —
     // xxhash64 is fixed, so this stays deterministic), hence identical
